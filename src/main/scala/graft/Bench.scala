@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
 
 /** Benchmark main. Prints ONE JSON line on stdout:
   *   {"metric":"total","value":<sum of per-query minima>,"unit":"sec",
@@ -50,21 +48,17 @@ import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
   * §7.1 consecutive-inflation rule to the `run` array to tell them apart.
   */
 object Bench {
+  /** Every number Bench prints or writes goes through here: the default
+    * locale's decimal comma (`1,234` under de-DE) would break the
+    * `json.loads` consumers of stdout and tools/bench_*.json. */
+  private[graft] def num(x: Double, decimals: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(x))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // no session artifacts -> skip the per-class-miss RPC fetch the
-      // Spark 4 isolation default installs (see GraftSession)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.warehouse.dir", GraftSession.warehouseDir())
-      .config("spark.local.dir", GraftSession.scratchDir())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-bench")
     // untimed warm-up: the first timed query otherwise absorbs 1-5 s of
     // JIT + codegen compilation (the §7.1 first-query variance class).
     // Two probes: a scan+agg shape (q1) AND a vector-kernel shape
@@ -72,10 +66,8 @@ object Bench {
     // timed loop and was still carrying ~2.6 s of kernel JIT in run 1
     // (bench_last r12: ann_dim_tradeoff 4.17 vs 1.54 s across runs)
     for (probe <- Seq("q1_pricing_summary", "sim_topk")) {
-      try {
-        val w = SparkEntry.queries(probe)(spark, sfDir)
-        w.agg(bit_xor(xxhash64(w.columns.map(col): _*)), count(lit(1))).head()
-      } catch { case _: Throwable => () }
+      try GraftSession.force(SparkEntry.queries(probe)(spark, sfDir))
+      catch { case _: Throwable => () }
     }
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -97,14 +89,9 @@ object Bench {
         }
       }
       val t0 = System.nanoTime()
-      // Force EVERY output column with a row-hash aggregate: a bare
-      // count() lets column pruning delete computed projections, so a
-      // projection-family query would time little more than the scan
-      // (round-6 fix). bit_xor, not sum: summed hashes overflow under ANSI.
       val failed =
         try {
-          val df = SparkEntry.queries(name)(spark, sfDir)
-          df.agg(bit_xor(xxhash64(df.columns.map(col): _*)), count(lit(1))).head()
+          GraftSession.force(SparkEntry.queries(name)(spark, sfDir))
           false
         } catch { case t: Throwable =>
           System.err.println(s"[bench] FAILED $name: ${t.getClass.getName}: ${t.getMessage}")
@@ -114,8 +101,7 @@ object Bench {
       // UNTIMED cleanup: the cluster-family queries each leave one live
       // localCheckpoint (their result); letting those accumulate across
       // the run recreates the round-3 storage-pressure variance class
-      val rdds = spark.sparkContext.getPersistentRDDs
-      (rdds.keySet -- baseline).foreach(id => rdds(id).unpersist(blocking = false))
+      GraftSession.sweep(spark, baseline)
       System.err.println(f"[bench] run$r $name%-32s $elapsed%8.2f s")
       trace += ((i, r, name, elapsed, failed))
       i += 1
@@ -126,21 +112,21 @@ object Bench {
       val ok = trace.filter(t => t._3 == n && !t._5).map(_._4)
       n -> (if (ok.nonEmpty) ok.min else -1.0)
     }.toMap
-    // %.3f: 1 ms resolution is far below the 0.5 s regression floor and
-    // halves the printed map (the driver keeps a small stdout tail)
-    val qs = names.map(n => "\"" + n + "\":" + f"${best(n)}%.3f").mkString("{", ",", "}")
+    // 3 decimals: 1 ms resolution is far below the 0.5 s regression floor
+    // and halves the printed map (the driver keeps a small stdout tail)
+    val qs = names.map(n => "\"" + n + "\":" + num(best(n), 3)).mkString("{", ",", "}")
     val runArr = trace.map { case (idx, r, n, s, f) =>
-      s"""{"i":$idx,"r":$r,"q":"$n","sec":$s,"err":$f}"""
+      s"""{"i":$idx,"r":$r,"q":"$n","sec":${num(s, 3)},"err":$f}"""
     }.mkString("[", ",", "]")
     val total = best.values.filter(_ >= 0).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$nRuns,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$qs,"runs":$nRuns,"sf":"$sfDir"}""")
 
     // --- compact summary as the LAST line (driver keeps a ~2 KB tail) ---
     val runTotals = (1 to nRuns).map(r =>
       trace.filter(_._2 == r).map(_._4).sum)
     val failedQs = names.filter(best(_) < 0)
     val slowest = names.sortBy(n => -best(n)).take(10)
-      .map(n => s"""{"q":"$n","sec":${f"${best(n)}%.2f"}}""")
+      .map(n => s"""{"q":"$n","sec":${num(best(n), 2)}}""")
     val baselinePath = java.nio.file.Paths.get("tools/bench_baseline.json")
     val baseMap: Map[String, Double] =
       if (java.nio.file.Files.exists(baselinePath)) {
@@ -154,7 +140,7 @@ object Bench {
     val regressions = names.flatMap { n =>
       baseMap.get(n).collect {
         case b if best(n) >= 0 && best(n) > 1.5 * b && best(n) - b > 0.5 =>
-          s"""{"q":"$n","sec":${f"${best(n)}%.2f"},"base":${f"$b%.2f"}}"""
+          s"""{"q":"$n","sec":${num(best(n), 2)},"base":${num(b, 2)}}"""
       }
     }
     // Drop the full per-query artifact beside the baseline on FULL runs:
@@ -169,7 +155,7 @@ object Bench {
       try {
         java.nio.file.Files.createDirectories(lastPath.getParent)
         java.nio.file.Files.write(lastPath,
-          (s"""{"sf":"$sfDir","runs":$nRuns,"total":${f"$total%.1f"},""" +
+          (s"""{"sf":"$sfDir","runs":$nRuns,"total":${num(total, 1)},""" +
             s""""queries":$qs,"run":$runArr}""" + "\n").getBytes)
       } catch { case t: Throwable =>
         System.err.println(s"[bench] bench_last write failed: ${t.getMessage}")
@@ -181,8 +167,8 @@ object Bench {
         (s"""{"sf":"$sfDir","runs":$nRuns,"queries":$qs}""" + "\n").getBytes)
       System.err.println(s"[bench] baseline written: $baselinePath")
     }
-    println(s"""{"metric":"summary","value":${f"$total%.1f"},"unit":"sec","total":${f"$total%.1f"},""" +
-      s""""run_totals":[${runTotals.map(t => f"$t%.1f").mkString(",")}],""" +
+    println(s"""{"metric":"summary","value":${num(total, 1)},"unit":"sec","total":${num(total, 1)},""" +
+      s""""run_totals":[${runTotals.map(num(_, 1)).mkString(",")}],""" +
       s""""failed":[${failedQs.map("\"" + _ + "\"").mkString(",")}],""" +
       s""""slowest":[${slowest.mkString(",")}],""" +
       s""""regressions":[${regressions.mkString(",")}],""" +

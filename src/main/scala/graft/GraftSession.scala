@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
 
-/** Session factory used by tests and benchmarks.
+/** Session factory used by tests, benchmarks and the driver mains, plus
+  * the forcing aggregate ([[force]]) and per-query storage sweep
+  * ([[sweep]]) those mains share.
   *
   * Scale posture: AQE on (runtime re-plan, skew-join splitting), shuffle
   * partitions sized to the local core count (on a real cluster this is
@@ -102,5 +105,23 @@ object GraftSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Run `df` to completion and return its row count. Every output column
+    * feeds a row-hash aggregate: a bare `count()` lets column pruning
+    * delete computed projections, so a projection-family frame would time
+    * little more than its scan. bit_xor, not sum: summed hashes overflow
+    * under ANSI. */
+  def force(df: DataFrame): Long =
+    df.agg(bit_xor(xxhash64(df.columns.map(col): _*)), count(lit(1)))
+      .head().getLong(1)
+
+  /** Unpersist every RDD persisted since `baseline` (a snapshot of
+    * `getPersistentRDDs.keySet`): the checkpoints and caches a query or
+    * timed op leaves behind. Letting them pile up across a run recreates
+    * the storage-pressure variance class. */
+  def sweep(spark: SparkSession, baseline: collection.Set[Int]): Unit = {
+    val rdds = spark.sparkContext.getPersistentRDDs
+    (rdds.keySet -- baseline).foreach(id => rdds(id).unpersist(blocking = false))
   }
 }

@@ -2711,23 +2711,25 @@ object SparkEntry {
   private def timeTravel(s: SparkSession, d: String): DataFrame = {
     import graft.sources.Snapshots
     import s.implicits._
+    // one week of events: the demo's semantics (3 versions, CoW
+    // delete/upsert rewrites, snapshot isolation) are day-count
+    // independent, and the fixture pays 3 full partitioned lake
+    // writes PER INVOCATION — the 30-day form was the bench's single
+    // slowest query (8.1 s, all fixture IO; ~2 s sliced).
+    // Eager checkpoint: the three commits lazily re-derive this frame
+    // FIVE times (append batch, delete keys, upsert batch twice,
+    // upsert keys) — each a serial events scan+filter (the
+    // multi-consumer re-scan rule; paired A/B measured −0.9 s,
+    // concentrated in the upsert commit). Taken before the temp lake
+    // exists, so a failing scan leaves no directory; freed in the
+    // finally, on success and failure alike.
+    val ev = events(s, d)
+      .filter(col("ts") < to_timestamp(lit("2024-01-08")))
+      .select("event_id", "user_id", "event_type", "ts")
+      .localCheckpoint(true)
     val path = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(stagingBase), "graft_time_travel_").toString
     try {
-      // one week of events: the demo's semantics (3 versions, CoW
-      // delete/upsert rewrites, snapshot isolation) are day-count
-      // independent, and the fixture pays 3 full partitioned lake
-      // writes PER INVOCATION — the 30-day form was the bench's single
-      // slowest query (8.1 s, all fixture IO; ~2 s sliced).
-      // Eager checkpoint: the three commits lazily re-derive this frame
-      // FIVE times (append batch, delete keys, upsert batch twice,
-      // upsert keys) — each a serial events scan+filter (the
-      // multi-consumer re-scan rule; paired A/B measured −0.9 s,
-      // concentrated in the upsert commit). Freed in the finally.
-      val ev = events(s, d)
-        .filter(col("ts") < to_timestamp(lit("2024-01-08")))
-        .select("event_id", "user_id", "event_type", "ts")
-        .localCheckpoint(true)
       val v1 = Snapshots.commitAppend(s, path, ev, "ts")
       val v2 = Snapshots.commitDeleteKeys(s, path, "user_id",
         ev.select(col("user_id")).filter(col("user_id") % 97 === 0))
@@ -2749,11 +2751,10 @@ object SparkEntry {
         // the returned frame doesn't read paths the finally block deletes
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5)))
-      // every consumer of the checkpointed events slice has run
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(ev)
       report.toSeq.toDF("version", "y", "m", "d", "n_rows", "sum_uid")
         .orderBy("version", "y", "m", "d")
     } finally {
+      org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(ev)
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
@@ -49,11 +49,25 @@ object Stress {
 
     // optional op filter: remaining args select which timings run
     val only: Set[String] = args.drop(2).toSet
-    def time(name: String)(f: => Long): Unit =
+    def withConfs[A](pairs: Seq[(String, String)])(f: => A): A = {
+      val conf = spark.conf
+      val prev = pairs.map { case (k, _) => k -> conf.getOption(k) }
+      pairs.foreach { case (k, v) => conf.set(k, v) }
+      try f
+      finally prev.foreach { case (k, v) =>
+        v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
+    // Each op returns its output frame; the clock covers building it and
+    // forcing it through GraftSession.force, with `confs` set for both
+    // planning and execution. What the op persisted is swept untimed.
+    def time(name: String, confs: Seq[(String, String)] = Nil)(
+        f: => DataFrame): Unit =
       if (only.isEmpty || only.contains(name)) {
+        val baseline = spark.sparkContext.getPersistentRDDs.keySet
         val t0 = System.nanoTime()
-        val rows = f
+        val rows = withConfs(confs)(GraftSession.force(f))
         println(f"[stress] $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($rows rows)")
+        GraftSession.sweep(spark, baseline)
       }
 
     // untimed probe FIRST: the first timed op in a stress invocation
@@ -62,30 +76,26 @@ object Stress {
     // class (blocklist_hits measured 3.6→55 s across identical-code runs
     // while later ops held stable). One scan+shuffle over both corpora
     // warms the common codegen shapes before any clock starts.
-    locally {
-      docs.groupBy(col("doc_id") % 7)
-        .agg(count(lit(1)), bit_xor(xxhash64(col("text")))).head()
-      emb.groupBy(col("vec_id") % 7)
-        .agg(count(lit(1)), bit_xor(xxhash64(col("label")))).head()
-    }
+    GraftSession.force(docs.groupBy(col("doc_id") % 7).agg(max(col("text"))))
+    GraftSession.force(emb.groupBy(col("vec_id") % 7).agg(max(col("label"))))
 
-    time("dedup_exact") { Dedup.exact(docs, "doc_id", "text").count() }
+    time("dedup_exact") { Dedup.exact(docs, "doc_id", "text") }
     time("ngram_jaccard") {
       Dedup.ngramJaccardPairs(docs, "doc_id", "text", tau = 0.5,
-        maxShingleFreq = Some(1000L)).count()
+        maxShingleFreq = Some(1000L))
     }
     // opt-in only (name it explicitly): on this dense synthetic corpus
     // (40-word vocab, near-dup replica cliques) prefix filtering does NOT
     // beat the naive join — "rare" prefix shingles still have df ~ 140 —
     // while on natural zipfian corpora it is the standard exact-join win
     if (only.contains("ngram_prefix_t08")) time("ngram_prefix_t08") {
-      Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text", tau = 0.8).count()
+      Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text", tau = 0.8)
     }
-    time("minhash_lsh") { Dedup.minhashLshPairs(docs, "doc_id", "text").count() }
-    time("simhash") { Dedup.simhashPairs(docs, "doc_id", "text").count() }
-    time("fingerprint") { TextAnalysis.fingerprint(docs, "doc_id", "text").count() }
+    time("minhash_lsh") { Dedup.minhashLshPairs(docs, "doc_id", "text") }
+    time("simhash") { Dedup.simhashPairs(docs, "doc_id", "text") }
+    time("fingerprint") { TextAnalysis.fingerprint(docs, "doc_id", "text") }
     time("embedding_pairs") {
-      Dedup.embeddingPairs(emb, "vec_id", "embedding", "label", tau = 0.35).count()
+      Dedup.embeddingPairs(emb, "vec_id", "embedding", "label", tau = 0.35)
     }
     time("dedup_semantic") {
       // k scales with the corpus (cells must stay join-ably small): 64
@@ -96,11 +106,11 @@ object Stress {
         Dedup.semanticPairs(emb, "vec_id", "embedding", tau = 0.9,
           k = 64, iters = 2), d1 = "v1", d2 = "v2",
         onRound = (r, secs) =>
-          println(f"[stress]   dedup_semantic round $r%2d: $secs%6.2f s")).count()
+          println(f"[stress]   dedup_semantic round $r%2d: $secs%6.2f s"))
     }
     time("sim_topk") {
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", 10).count()
+        "vec_id", "embedding", 10)
     }
     // cross-corpus semantic decontamination at replica scale: the bench
     // side stays FIXED-SIZE (the base corpus's % 10 slice — benchmarks
@@ -115,7 +125,7 @@ object Stress {
         emb.filter(col("vec_id") >= ne),
         Tables.embeddings(spark, sfDir).filter(col("vec_id") % 10 === 0),
         "vec_id", "embedding", tau = 0.9, k = 16, iters = 2, nProbe = 4)
-        .filter(col("contaminated")).count()
+        .filter(col("contaminated"))
     }
 
     // custom heap top-k vs the window formulation on the same task:
@@ -127,11 +137,10 @@ object Stress {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("g")).orderBy(col("n").desc, col("doc_id"))
       grouped.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= 3).count()
+        .filter(col("__rn") <= 3)
     }
     time("topk_heap") {
       graft.plans.TopKPerGroup(grouped, Seq("g"), Seq(("n", true), ("doc_id", false)), 3)
-        .count()
     }
 
     // temporal ops on a 20x event stream
@@ -152,7 +161,7 @@ object Stress {
       val newSession = when(gapUs.isNull || gapUs > lit(1800L * 1000000L), 1).otherwise(0)
       ev.withColumn("session_id",
           sum(newSession).over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id", "session_id").count().count()
+        .groupBy("user_id", "session_id").agg(count(lit(1)).as("n"))
     }
     time("asof_join") {
       val clicks = ev.filter(col("event_type") === "click")
@@ -161,7 +170,6 @@ object Stress {
         .select("event_id", "user_id", "ts")
       graft.operators.Temporal
         .asofJoin(clicks, purchases, "user_id", "ts", "ts", Seq("click_id"))
-        .count()
     }
     time("asof_join_forward") {
       val clicks = ev.filter(col("event_type") === "click")
@@ -170,7 +178,6 @@ object Stress {
         .select("event_id", "user_id", "ts")
       graft.operators.Temporal
         .asofJoinForward(clicks, purchases, "user_id", "ts", "ts", Seq("click_id"))
-        .count()
     }
     time("interval_join") {
       val clicks = ev.filter(col("event_type") === "click").select(
@@ -182,11 +189,9 @@ object Stress {
       graft.operators.Temporal
         .intervalJoin(purchases, clicks, "ts", "start_ts", "end_ts",
           binWidthUs = 1800L * 1000000L, keys = Seq("user_id"))
-        .count()
     }
     time("cohort_retention") {
-      // the single-shuffle rollup from SparkEntry.cohortRetention; count()
-      // is a fair forcing here (aggregate cardinality needs the full agg)
+      // the single-shuffle rollup from SparkEntry.cohortRetention
       val perUser = ev.groupBy("user_id")
         .agg(min(to_date(col("ts"))).as("cohort_day"),
           collect_set(to_date(col("ts"))).as("__days"))
@@ -194,59 +199,43 @@ object Stress {
         .groupBy(col("cohort_day"),
           datediff(col("day"), col("cohort_day")).as("day_offset"))
         .agg(count(lit(1)).as("active_users"))
-        .count()
     }
     time("heavy_hitters") {
-      TextAnalysis.heavyHitters(docs, "text", k = 50).count()
+      TextAnalysis.heavyHitters(docs, "text", k = 50)
     }
     // the scan-speed claims: repetition/scrub are pure projections, the
-    // chunker is projection + explode — their 20x cost must stay ~linear.
-    // Each bench aggregates a CHECKSUM over the computed columns (not a
-    // bare count), so column pruning cannot eliminate the expressions
-    // being timed; the checksum row also carries the row count.
-    def forced(df: DataFrame, checksum: Column): Long =
-      df.agg(checksum.as("__ck"), count(lit(1)).as("__n")).head().getLong(1)
+    // chunker is projection + explode — their 20x cost must stay ~linear
     time("text_repetition") {
-      forced(TextAnalysis.repetition(docs, "doc_id", "text"),
-        sum(col("dup_token_frac") + col("dup_2gram_frac") + col("dup_3gram_frac")))
+      TextAnalysis.repetition(docs, "doc_id", "text")
     }
     time("text_entropy") {
-      val out = TextAnalysis.tokenEntropy(docs, "doc_id", "text")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      TextAnalysis.tokenEntropy(docs, "doc_id", "text")
     }
     time("text_readability") {
-      val out = TextAnalysis.readability(docs, "doc_id", "text")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      TextAnalysis.readability(docs, "doc_id", "text")
     }
     time("pii_scrub") {
-      forced(TextAnalysis.scrubPii(docs, "text"),
-        sum(crc32(col("text_scrubbed")) + col("n_pii")))
+      TextAnalysis.scrubPii(docs, "text")
     }
     time("doc_chunks") {
-      forced(TextAnalysis.chunkTokens(docs, "doc_id", "text", 32, 24),
-        sum(crc32(col("chunk_text")) + col("n_chunk_tokens")))
+      TextAnalysis.chunkTokens(docs, "doc_id", "text", 32, 24)
     }
     time("doc_chunks_cdc") {
-      forced(TextAnalysis.chunkContentDefined(docs, "doc_id", "text"),
-        sum(crc32(col("chunk_hash")) + col("n_chunk_tokens")))
+      TextAnalysis.chunkContentDefined(docs, "doc_id", "text")
     }
     time("pack_sequences") {
-      forced(graft.operators.Curation.packSequences(
-          TextAnalysis.chunkTokens(docs, "doc_id", "text", 32, 24)
-            .withColumn("source", (col("doc_id") % 5).cast("string")),
-          "source", Seq("doc_id", "chunk_id"), "n_chunk_tokens",
-          budget = 512L, shards = 8),
-        sum(col("seq_id") + col("shard")))
+      graft.operators.Curation.packSequences(
+        TextAnalysis.chunkTokens(docs, "doc_id", "text", 32, 24)
+          .withColumn("source", (col("doc_id") % 5).cast("string")),
+        "source", Seq("doc_id", "chunk_id"), "n_chunk_tokens",
+        budget = 512L, shards = 8)
     }
     time("pack_sequences_bfd") {
-      forced(graft.operators.Curation.packSequencesBfd(
-          TextAnalysis.chunkTokens(docs, "doc_id", "text", 32, 24)
-            .withColumn("source", (col("doc_id") % 5).cast("string")),
-          "source", Seq("doc_id", "chunk_id"), "n_chunk_tokens",
-          budget = 512L, shards = 8),
-        sum(col("seq_id") + col("shard")))
+      graft.operators.Curation.packSequencesBfd(
+        TextAnalysis.chunkTokens(docs, "doc_id", "text", 32, 24)
+          .withColumn("source", (col("doc_id") % 5).cast("string")),
+        "source", Seq("doc_id", "chunk_id"), "n_chunk_tokens",
+        budget = 512L, shards = 8)
     }
     time("dim_scd2") {
       // dim = one open row per doc keyed on doc_id; batch re-attributes
@@ -257,64 +246,56 @@ object Stress {
       val ch = docs.filter(col("doc_id") % 3 === 0)
         .select(col("doc_id"), lit("CHANGED").as("attr"),
           to_date(lit("2024-06-01")).as("ts"))
-      graft.operators.Star.scd2Apply(cur, ch, "doc_id", Seq("attr"), "ts").count()
+      graft.operators.Star.scd2Apply(cur, ch, "doc_id", Seq("attr"), "ts")
     }
     time("tfidf_top_terms") {
-      TextAnalysis.tfidfTopTerms(docs, "doc_id", "text", 3).count()
+      TextAnalysis.tfidfTopTerms(docs, "doc_id", "text", 3)
     }
     time("lm_score") {
-      forced(TextAnalysis.lmScore(docs, docs, "doc_id", "text"),
-        sum(col("nll") + col("n_bigrams")))
+      TextAnalysis.lmScore(docs, docs, "doc_id", "text")
     }
     time("decontaminate_jaccard") {
       Dedup.crossJaccardPairs(
         docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0), "doc_id", "text").count()
+        docs.filter(col("doc_id") % 10 === 0), "doc_id", "text")
     }
     time("decontaminate_minhash") {
       Dedup.crossMinhashPairs(
         docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0), "doc_id", "text").count()
+        docs.filter(col("doc_id") % 10 === 0), "doc_id", "text")
     }
     time("boilerplate_passages") {
-      forced(TextAnalysis.dropBoilerplatePassages(docs, "doc_id", "text",
-          windowTokens = 3, maxDf = 3L),
-        sum(crc32(col("text_clean")) + col("n_dropped")))
+      TextAnalysis.dropBoilerplatePassages(docs, "doc_id", "text",
+        windowTokens = 3, maxDf = 3L)
     }
     time("repeated_spans") {
-      Dedup.repeatedSpans(docs, "doc_id", "text", w = 6, minDf = 2).count()
+      Dedup.repeatedSpans(docs, "doc_id", "text", w = 6, minDf = 2)
     }
     time("dedup_substring") {
-      forced(Dedup.maskRepeatedSpans(docs, "doc_id", "text", w = 6, minDf = 2),
-        sum(col("n_masked") + col("n_spans")))
+      Dedup.maskRepeatedSpans(docs, "doc_id", "text", w = 6, minDf = 2)
     }
     time("dsir_weights") {
       // no source column on the stress corpus: target = a deterministic
       // 1/5 hash slice of the doc ids
-      forced(graft.operators.Curation.dsirWeights(docs,
-          xxhash64(col("doc_id")) % 5 === 0, "doc_id", "text"),
-        sum(col("dsir_score") + col("n_feats")))
+      graft.operators.Curation.dsirWeights(docs,
+        xxhash64(col("doc_id")) % 5 === 0, "doc_id", "text")
     }
     time("pq_ann_topk") {
-      forced(Similarity.pqAnnTopK(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 10),
-        sum(col("adc_dist") + col("rank")))
+      Similarity.pqAnnTopK(emb, emb.filter(col("vec_id") < 8),
+        "vec_id", "embedding", k = 10)
     }
     time("sim_ivfpq_topk") {
-      forced(Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 10, coarseCells = 32, nProbe = 4),
-        sum(col("adc_dist") + col("rank")))
+      Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 8),
+        "vec_id", "embedding", k = 10, coarseCells = 32, nProbe = 4)
     }
     time("text_winnow") {
-      forced(TextAnalysis.winnowFingerprints(docs, "doc_id", "text", k = 4, w = 4),
-        sum(col("gram_hash") + col("pos")))
+      TextAnalysis.winnowFingerprints(docs, "doc_id", "text", k = 4, w = 4)
     }
     time("bm25_topk") {
       // query set = 8 docs (the registry convention) against the full
       // replicated corpus
-      forced(TextAnalysis.bm25TopK(docs, docs.filter(col("doc_id") < 8),
-          "doc_id", "text", k = 10),
-        sum(col("score") + col("doc_id")))
+      TextAnalysis.bm25TopK(docs, docs.filter(col("doc_id") < 8),
+        "doc_id", "text", k = 10)
     }
     // the contraction-based cluster family, with per-round telemetry: the
     // central claim (FastSV fold+shortcut+contraction => ~log(diameter)
@@ -329,49 +310,39 @@ object Stress {
       Dedup.clusterPairs(
         Dedup.ngramJaccardPairs(docs, "doc_id", "text", tau = 0.5,
           maxShingleFreq = Some(1000L)),
-        onRound = logRounds("dedup_clusters")).count()
+        onRound = logRounds("dedup_clusters"))
     }
     // cluster the MINHASH pairs (the approximate scale path feeds the
     // canonicalizer at 100 TB, not the exact join): ~1M pair edges over
     // 100k nodes, replica cliques -> few pointer-jumping rounds
     time("dedup_clusters_lsh") {
       Dedup.clusterPairs(Dedup.minhashLshPairs(docs, "doc_id", "text"),
-        onRound = logRounds("dedup_clusters_lsh")).count()
+        onRound = logRounds("dedup_clusters_lsh"))
     }
     // incremental exact dedup at chunk granularity — the registered-query
-    // shape: batch ~40% of chunks classified against the indexed rest;
-    // forced with a checksum (count() could eliminate the outer join)
+    // shape: batch ~40% of chunks classified against the indexed rest
     time("dedup_incremental") {
       val chunks = TextAnalysis.chunkTokens(docs, "doc_id", "text",
           chunkSize = 16, stride = 8)
         .select(col("doc_id"), col("chunk_id"),
           md5(col("chunk_text")).as("chunk_hash"))
-      val out = Dedup.incrementalExact(
+      Dedup.incrementalExact(
         chunks.filter(col("doc_id") % 5 >= 2),
         chunks.filter(col("doc_id") % 5 < 2),
         "chunk_hash", orderCols = Seq("doc_id", "chunk_id"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // rolling point-in-time features and spike flags over the replicated
-    // stream; forced with a checksum — count() would prune the Window /
-    // trailing-frame columns out of the plan
+    // stream
     time("events_rolling") {
-      val out = graft.operators.Temporal.rollingCounts(
+      graft.operators.Temporal.rollingCounts(
         ev.withColumn("value", (col("event_id") % 97).cast("double")),
         "user_id", "ts", "value", horizonSec = 86400L)
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("events_spike") {
-      val out = graft.operators.Quality.spikes(ev, "event_type", "ts")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      graft.operators.Quality.spikes(ev, "event_type", "ts")
     }
     time("events_cusum") {
-      val out = graft.operators.Quality.cusum(ev, "event_type", "ts")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      graft.operators.Quality.cusum(ev, "event_type", "ts")
     }
     time("value_psi") {
       // replica-tagged types (x10 sources) so the grid scales too; the
@@ -380,14 +351,10 @@ object Stress {
         .crossJoin(spark.range(factor).toDF("rep"))
         .select(concat(col("event_type"), lit("#"),
           pmod(col("rep"), lit(10L))).as("event_type"), col("value"))
-      val out = graft.operators.Quality.psiFromCounts(
+      graft.operators.Quality.psiFromCounts(
         e.select(col("event_type"), floor(col("value") * 16).as("bin"))
           .groupBy("event_type", "bin").agg(count(lit(1)).as("n")),
         "event_type", "bin", "n")
-      val r = out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
-      spark.sharedState.cacheManager.clearCache() // psi's rollup persist
-      r
     }
     if (only.isEmpty || only.contains("staged_delete")) {
       // stage the replicated stream as a y/m/d lake OUTSIDE the timer —
@@ -402,7 +369,6 @@ object Stress {
         time("staged_delete") {
           val keys = ev.select(col("user_id")).filter(col("user_id") % 97 === 0)
           graft.sources.Staging.deleteKeys(spark, lakeDir, "user_id", keys)
-            .count()
         }
       } finally {
         val p = new org.apache.hadoop.fs.Path(lakeDir)
@@ -414,46 +380,31 @@ object Stress {
     // both (a broadcastable dim makes skew moot — the scenario is the
     // dim that outgrew the broadcast threshold), so the comparison is
     // shuffle-join-with-hot-key vs salted shuffle join, with AQE's
-    // skew-split active in both (the production posture). Forced with
-    // the checksum so the join output is fully materialized.
+    // skew-split active in both (the production posture).
     val hotEv = ev.withColumn("user_id",
       when(col("event_id") % 2 === 0, lit(7L)).otherwise(col("user_id")))
     val userDim = ev.select("user_id").distinct()
       .withColumn("segment", pmod(xxhash64(col("user_id")), lit(100L)))
       .localCheckpoint(true)
-    def timedHotJoin(name: String)(join: => DataFrame): Unit =
-      time(name) {
-        val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          forced(join, bit_xor(xxhash64(col("user_id"), col("segment"), col("event_id"))))
-        } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-      }
-    timedHotJoin("join_hot_plain") { hotEv.join(userDim, Seq("user_id")) }
-    timedHotJoin("join_hot_salted") {
+    val noBroadcast = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    time("join_hot_plain", noBroadcast) { hotEv.join(userDim, Seq("user_id")) }
+    time("join_hot_salted", noBroadcast) {
       graft.operators.Skew.saltedJoin(hotEv, userDim, Seq("user_id"),
         saltBy = Seq(col("event_id")), salts = 32)
     }
     time("shuffle_shards") {
-      val out = graft.operators.Curation.shuffleShards(
+      graft.operators.Curation.shuffleShards(
         docs.select("doc_id"), "doc_id", nShards = 64, seed = 42L)
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("corpus_drift") {
-      // replica-tagged sources so the per-source frame scales with factor;
-      // forced with the checksum aggregate — count() would let the
-      // optimizer prune the TV-distance aggregates (and the window stage
-      // feeding them) out of the groupBy
+      // replica-tagged sources so the per-source frame scales with factor
       val src = docs.withColumn("source",
         concat(lit("s"), pmod(col("doc_id"), lit(20L))))
-      val out = graft.operators.Quality.drift(src, "source", "text")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      graft.operators.Quality.drift(src, "source", "text")
     }
     time("dedup_containment") {
       Dedup.ngramContainmentPairs(docs, "doc_id", "text", tau = 0.9,
-        maxShingleFreq = Some(1000L)).count()
+        maxShingleFreq = Some(1000L))
     }
     // z-order rewrite: interleave projection + sampled range shuffle +
     // parquet write, the full OPTIMIZE ZORDER BY path at docs x factor
@@ -466,27 +417,24 @@ object Stress {
       val dir = GraftSession.scratchDir() + "/stress-zorder"
       graft.operators.Layout.zorderWrite(rows, Seq("a", "b"), bits = 20,
         path = dir, files = 64)
-      spark.read.parquet(dir).count()
+      spark.read.parquet(dir)
     }
     time("embedding_quantize") {
-      // scan-bound: dim stats + broadcast-back quantization; checksum
-      // forces every code (count would prune the projection)
-      val out = Similarity.sq8Encode(emb, "vec_id", "embedding")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      // scan-bound: dim stats + broadcast-back quantization
+      Similarity.sq8Encode(emb, "vec_id", "embedding")
     }
     time("embedding_outliers") {
-      Similarity.embeddingOutliers(emb, "vec_id", "embedding", k = 20).count()
+      Similarity.embeddingOutliers(emb, "vec_id", "embedding", k = 20)
     }
     time("collocations_pmi") {
       // word-type-bounded aggregates; the replica tag token (r0..rN)
       // adds factor-many new types but the planted phrase mass scales
-      TextAnalysis.collocations(docs, "text", minCount = 5L, k = 50).count()
+      TextAnalysis.collocations(docs, "text", minCount = 5L, k = 50)
     }
     time("curation_pipeline") {
       // the six-stage end-to-end chain on the replicated corpus
       // (replica-tagged sources; unseen sources take the default mixture
-      // weight). Forced via the final manifest aggregate's row count.
+      // weight).
       import graft.operators.Cleaning.CleaningOps
       val src = docs.withColumn("source",
         concat(lit("s"), pmod(col("doc_id"), lit(20L))))
@@ -511,7 +459,6 @@ object Stress {
           budget = 512L, shards = 8)
         .groupBy("source", "shard", "seq_id")
         .agg(count(lit(1)), sum(col("n_chunk_tokens")))
-        .count()
     }
     time("snapshot_diff") {
       val base = docs.filter(col("doc_id") % 7 =!= 0)
@@ -519,37 +466,29 @@ object Stress {
         .withColumn("text", when(col("doc_id") % 3 === 0,
           concat(col("text"), lit(" v2"))).otherwise(col("text")))
       graft.sources.Staging.snapshotDiff(base, cur, "doc_id", Seq("text"))
-        .filter(col("status") =!= "unchanged").count()
+        .filter(col("status") =!= "unchanged")
     }
     time("quality_classifier") {
-      // zero-shuffle per-row fold; checksum forces every score
-      val out = TextAnalysis.hashedLinearScore(docs, "doc_id", "text",
+      // zero-shuffle per-row fold
+      TextAnalysis.hashedLinearScore(docs, "doc_id", "text",
         TextAnalysis.knuthWeights(64))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("quality_ensemble") {
       // three scorers fused into one scan — cost ~= the classifier alone
-      val out = TextAnalysis.ensembleGate(docs, "doc_id", "text",
+      TextAnalysis.ensembleGate(docs, "doc_id", "text",
         TextAnalysis.knuthWeights(64))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("rolling_active_users") {
-      val out = graft.operators.Temporal.rollingDistinct(ev,
+      graft.operators.Temporal.rollingDistinct(ev,
         to_date(col("ts")), col("user_id"), windowDays = 7)
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("event_transitions") {
       import org.apache.spark.sql.expressions.Window
       val byUser = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val out = ev
+      ev
         .withColumn("prev_type", lag(col("event_type"), 1).over(byUser))
         .filter(col("prev_type").isNotNull)
         .groupBy("prev_type", "event_type").agg(count(lit(1)).as("n"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("pagerank") {
       // user ↔ active-hour co-occurrence graph (both directions): users
@@ -561,8 +500,6 @@ object Stress {
       val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
         .union(pairs.select(col("b").as("src"), col("a").as("dst")))
       graft.operators.Graph.pageRankInt(edges, "src", "dst", iters = 5)
-        .agg(bit_xor(xxhash64(col("node"), col("pr"))), count(lit(1)))
-        .head().getLong(1)
     }
     time("pareto_front") {
       // 50-value discrete max-dim over the event stream (the documented
@@ -570,7 +507,7 @@ object Stress {
       val pts = ev.select(col("event_id"),
         pmod(xxhash64(col("user_id")), lit(50L)).as("sz"),
         unix_micros(col("ts")).as("age"))
-      graft.operators.Frontier.skyline2D(pts, "sz", "age").count()
+      graft.operators.Frontier.skyline2D(pts, "sz", "age")
     }
     time("hop_distance") {
       // BFS over the same user↔hour graph pagerank stresses, seeded by
@@ -582,17 +519,12 @@ object Stress {
       val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
         .union(pairs.select(col("b").as("src"), col("a").as("dst")))
       val seeds = ev.select(col("user_id").as("node")).distinct().limit(100)
-      val res = graft.operators.Graph.hopDistance(edges, "src", "dst",
+      graft.operators.Graph.hopDistance(edges, "src", "dst",
         seeds, "node", maxHops = 4)
-      val n = res.count()
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(res)
-      n
     }
     time("embedding_pca") {
       val (mu, v, _) = Similarity.principalComponent(emb, "embedding", iters = 8)
       Similarity.pcaProject(emb, "vec_id", "embedding", mu, v)
-        .agg(bit_xor(xxhash64(col("vec_id"), col("pc1_score"))), count(lit(1)))
-        .head().getLong(1)
     }
     // basket/binning family over a replicated lineitem (orderkey offset
     // per replica: factor-many more baskets, same basket-size profile)
@@ -615,16 +547,12 @@ object Stress {
       pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(1L << 20)).as("a"),
       pmod(xxhash64(col("l_partkey")), lit(1L << 20)).as("b"))
     time("zorder_value") {
-      val out = layoutRows.withColumn("v",
+      layoutRows.withColumn("v",
         graft.operators.Layout.zvalue(Seq(col("a"), col("b")), bits = 20))
-      out.agg(bit_xor(xxhash64(col("l_orderkey"), col("v"))), count(lit(1)))
-        .head().getLong(1)
     }
     time("hilbert_value") {
-      val out = graft.operators.Layout.hilbertLayout(
+      graft.operators.Layout.hilbertLayout(
         layoutRows, "a", "b", bits = 20, as = "v")
-      out.agg(bit_xor(xxhash64(col("l_orderkey"), col("v"))), count(lit(1)))
-        .head().getLong(1)
     }
     time("basket_pairs") {
       val items = li
@@ -641,18 +569,14 @@ object Stress {
         .join(freq.select(col("p").as("p1"), col("n_p").as("n1")), Seq("p1"))
         .join(freq.select(col("p").as("p2"), col("n_p").as("n2")), Seq("p2"))
         .crossJoin(broadcast(total))
-        .count()
     }
     time("feature_ntile") {
       val keyed = li.withColumn("uid",
         col("l_orderkey") * 10L + col("l_linenumber"))
       val binned = graft.operators.Ranking.equiDepthBins(
         keyed, "l_extendedprice", "uid", k = 100)
-      val out = binned.groupBy("bucket")
+      binned.groupBy("bucket")
         .agg(count(lit(1)), min("l_extendedprice"), max("l_extendedprice"))
-        .count()
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(binned)
-      out
     }
 
     // ---- round-10 session-4 additions ----
@@ -672,8 +596,7 @@ object Stress {
       .localCheckpoint(true)
     println(s"[stress] customers: ${cust.count()} (x$factor)")
     time("record_linkage") {
-      forced(graft.operators.Linkage.fuzzyPairs(cust, "c_custkey", "c_name"),
-        bit_xor(xxhash64(col("id1"), col("id2"), col("dist"))))
+      graft.operators.Linkage.fuzzyPairs(cust, "c_custkey", "c_name")
     }
     // census over the LSH pair graph — the scale path for pair
     // generation (the exact-Jaccard path shares dedup_clusters'
@@ -681,21 +604,18 @@ object Stress {
     // itself is edge-bounded either way)
     time("graph_transitivity") {
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text").select("d1", "d2")
-      forced(graft.operators.Graph.transitivity(pairs, "d1", "d2"),
-        bit_xor(xxhash64(col("n_edges"), col("n_wedges"), col("n_triangles"))))
+      graft.operators.Graph.transitivity(pairs, "d1", "d2")
     }
     time("ngram_diversity") {
       val src = docs.withColumn("source",
         concat(lit("s"), pmod(col("doc_id"), lit(20))))
-      val d = src
+      src
         .select(col("source"),
           explode(graft.functions.wordShingles(col("text"), 3)).as("sh"))
         .groupBy("source", "sh").agg(count(lit(1)).as("c"))
         .groupBy("source")
         .agg(sum(col("c")).as("n_total"), count(lit(1)).as("n_distinct"),
           sum(when(col("c") === 1, 1L).otherwise(0L)).as("n_singletons"))
-      forced(d, bit_xor(xxhash64(col("source"), col("n_total"),
-        col("n_distinct"), col("n_singletons"))))
     }
     // the 100 TB hash swap measured against the string form above: the
     // rollup keys on xxhash64(shingle) (8-byte shuffle key vs trigram
@@ -703,7 +623,7 @@ object Stress {
     time("ngram_diversity_hashed") {
       val src = docs.withColumn("source",
         concat(lit("s"), pmod(col("doc_id"), lit(20))))
-      val d = src
+      src
         .select(col("source"),
           explode(graft.functions.wordShingles(col("text"), 3)).as("sh"))
         .select(col("source"), xxhash64(col("sh")).as("h"))
@@ -711,12 +631,9 @@ object Stress {
         .groupBy("source")
         .agg(sum(col("c")).as("n_total"), count(lit(1)).as("n_distinct"),
           sum(when(col("c") === 1, 1L).otherwise(0L)).as("n_singletons"))
-      forced(d, bit_xor(xxhash64(col("source"), col("n_total"),
-        col("n_distinct"), col("n_singletons"))))
     }
     time("skipgram_pairs") {
-      forced(TextAnalysis.skipgramPairs(docs, "text", window = 3, k = 30),
-        bit_xor(xxhash64(col("w1"), col("w2"), col("n"))))
+      TextAnalysis.skipgramPairs(docs, "text", window = 3, k = 30)
     }
     // event-stream additions over the replicated stream (value synthesized
     // per event — ev carries no value column)
@@ -727,7 +644,7 @@ object Stress {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val touch = when(col("event_type").isin("click", "view"), col("event_type"))
-      val d = evv
+      evv
         .filter(col("event_type").isin("click", "view", "purchase"))
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
         .select(col("event_type"), col("value"),
@@ -737,7 +654,6 @@ object Stress {
         .agg(count(lit(1)).as("n_purchases"),
           sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
             .cast("double").as("revenue"))
-      forced(d, bit_xor(xxhash64(col("touch_type"), col("n_purchases"), col("revenue"))))
     }
     time("attribution") {
       // the registered form: accumulating frame (unbounded..current) + lag(1);
@@ -747,7 +663,7 @@ object Stress {
       val wOrd = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       val wAcc = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val touch = when(col("event_type").isin("click", "view"), col("event_type"))
-      val d = evv
+      evv
         .filter(col("event_type").isin("click", "view", "purchase"))
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"),
@@ -759,12 +675,11 @@ object Stress {
         .agg(count(lit(1)).as("n_purchases"),
           sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
             .cast("double").as("revenue"))
-      forced(d, bit_xor(xxhash64(col("touch_type"), col("n_purchases"), col("revenue"))))
     }
     time("top_paths") {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val d = ev
+      ev
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
         .select(col("event_type"),
           lag(col("event_type"), 1).over(w).as("prev1"),
@@ -773,16 +688,14 @@ object Stress {
         .groupBy(concat_ws(">", col("prev2"), col("prev1"), col("event_type")).as("path"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("path")).limit(20)
-      forced(d, bit_xor(xxhash64(col("path"), col("n"))))
     }
     time("audience_overlap") {
-      val d = ev.groupBy("user_id")
+      ev.groupBy("user_id")
         .agg(sort_array(collect_set(col("event_type"))).as("ts"))
         .select(explode(col("ts")).as("t1"), col("ts"))
         .select(col("t1"), explode(col("ts")).as("t2"))
         .filter(col("t1") <= col("t2"))
         .groupBy("t1", "t2").agg(count(lit(1)).as("n_users"))
-      forced(d, bit_xor(xxhash64(col("t1"), col("t2"), col("n_users"))))
     }
     // Q4 semi-join over replicated orders + (orderkey, shipdate) lineitem
     val ord0 = Tables.orders(spark, sfDir)
@@ -800,7 +713,7 @@ object Stress {
     // the textbook semi-join (sort-merges the raw fact) vs the
     // monotone-EXISTS max-rewrite the registered query ships
     time("q4_semi_naive") {
-      val d = ordR
+      ordR
         .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
           col("o_orderdate") < to_timestamp(lit("1996-04-01")))
         .join(liSd,
@@ -809,19 +722,17 @@ object Stress {
           "leftsemi")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"))
-      forced(d, bit_xor(xxhash64(col("o_orderpriority"), col("n_orders"))))
     }
     time("q4_priority_late") {
       val lMax = liSd.groupBy(col("l_orderkey"))
         .agg(max(col("l_shipdate")).as("max_shipdate"))
-      val d = ordR
+      ordR
         .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
           col("o_orderdate") < to_timestamp(lit("1996-04-01")))
         .join(lMax, col("o_orderkey") === col("l_orderkey"))
         .filter(col("max_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"))
-      forced(d, bit_xor(xxhash64(col("o_orderpriority"), col("n_orders"))))
     }
 
     // ---- session-5 additions ----
@@ -831,19 +742,15 @@ object Stress {
     time("value_ks") {
       val evV = ev.withColumn("value",
         (pmod(xxhash64(col("event_id")), lit(10000000L)) / 1000.0))
-      val out = graft.operators.Quality.ksStatistic(
+      graft.operators.Quality.ksStatistic(
         evV, "event_type", "value", "click", "view")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("events_trend") {
       val hourly = ev
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
         .agg(count(lit(1)).as("n"))
-      val out = graft.operators.Quality.trendFromBuckets(
+      graft.operators.Quality.trendFromBuckets(
         hourly, "event_type", "h", "n")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // checkpointed replicate OUTSIDE the timer (the docs/emb/ev
     // convention) — the first in-timer formulation measured the 60M-row
@@ -856,16 +763,14 @@ object Stress {
       .localCheckpoint(true)
     println(s"[stress] lineitem-num: ${li4.count()} (x$factor)")
     time("numeric_corr") {
-      val out = graft.operators.Quality.corrMatrix(li4,
+      graft.operators.Quality.corrMatrix(li4,
         Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("token_cms") {
-      TextAnalysis.cmsTokenEstimates(docs, "text", k = 20).count()
+      TextAnalysis.cmsTokenEstimates(docs, "text", k = 20)
     }
     time("diverse_sample") {
-      Similarity.farthestPointSample(emb, "vec_id", "embedding", k = 8).count()
+      Similarity.farthestPointSample(emb, "vec_id", "embedding", k = 8)
     }
     // approx bounds: the exact-percentile path buffers every distinct
     // value per group and heap-OOMs at ~15M distinct doubles (measured,
@@ -874,11 +779,9 @@ object Stress {
     time("price_winsorize") {
       val ordW = ordR.withColumn("o_totalprice",
         (pmod(xxhash64(col("o_orderkey")), lit(1000000000L)) / 100.0))
-      val out = graft.operators.Curation.winsorizeReport(
+      graft.operators.Curation.winsorizeReport(
         ordW, "o_orderpriority", "o_totalprice",
         approxAccuracy = Some(10000))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // the boundary-retirement witness: EXACT quantiles on ~16M DISTINCT
     // doubles per group — past the measured ~15M-distinct point where
@@ -891,14 +794,8 @@ object Stress {
       val vals = spark.range(32L * 1000 * 1000)
         .select((col("id") % 2).cast("string").as("k"),
           (pmod(xxhash64(col("id")), lit(1000000000000L)) / 1000.0).as("v"))
-      val out = graft.operators.Quantiles.exactByKey(vals, "k", "v",
+      graft.operators.Quantiles.exactByKey(vals, "k", "v",
         Seq("p25" -> 0.25, "p50" -> 0.5, "p95" -> 0.95))
-      val n = out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
-      // free the ~32M-row prefix-sum checkpoint — retained blocks here
-      // are exactly the stress-context-inflation class (round-11/12)
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(out)
-      n
     }
     // the STORED-sketch posture on the same 32M frame: one bounded hash
     // aggregate (k=1024 pairs + a counter per group, map-side combined)
@@ -908,19 +805,15 @@ object Stress {
       val vals = spark.range(32L * 1000 * 1000)
         .select((col("id") % 2).cast("string").as("k"), col("id").as("rid"),
           (pmod(xxhash64(col("id")), lit(1000000000000L)) / 1000.0).as("v"))
-      val out = graft.operators.Quantiles.sketchByKey(vals, "k", "v", "rid",
+      graft.operators.Quantiles.sketchByKey(vals, "k", "v", "rid",
           k = 1024)
         .select(col("k"), col("sketch.n").as("n"),
           graft.operators.Quantiles.sketchQuantile(col("sketch"), 0.5).as("p50"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("multimodal_phash") {
       val media = graft.operators.Multimodal.asMedia(
         docs.withColumn("source", lit("s")), "doc_id", "text", "source")
-      val h = graft.operators.Multimodal.perceptualHash(media).toDF()
-      h.agg(bit_xor(xxhash64(col("doc_id"), col("phash"))), count(lit(1)))
-        .head().getLong(1)
+      graft.operators.Multimodal.perceptualHash(media).toDF()
     }
     // RFM on a synthesized per-customer order stream: ordR already
     // carries factor-many customers' orders; custkey/totalprice derive
@@ -945,10 +838,8 @@ object Stress {
         ranked.withColumn(out,
           graft.operators.Ranking.ntileFromRank(col("__rk"), n, 5)).drop("__rk")
       }
-      val out = score(score(score(custF, "recency_days", "r_raw"),
+      score(score(score(custF, "recency_days", "r_raw"),
         "frequency", "f_score"), "monetary", "m_score")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("supplier_scorecard") {
       val late = liSd
@@ -964,8 +855,7 @@ object Stress {
             col("o_orderdate") + expr("INTERVAL 60 DAYS")).cast("long"))
             .as("n_late"))
         .orderBy(col("revenue").desc, col("l_suppkey")).limit(20)
-      late.agg(bit_xor(xxhash64(late.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      late
     }
     time("monitor_report") {
       val hourly = ev
@@ -981,12 +871,10 @@ object Stress {
         .select(col("event_type"),
           graft.functions.tsString(col("h")).as("hour_start"),
           col("spike").cast("long").as("ewma_flag"))
-      val out = zf.join(mf, Seq("event_type", "hour_start"))
+      zf.join(mf, Seq("event_type", "hour_start"))
         .join(ef, Seq("event_type", "hour_start"))
         .withColumn("n_flagged",
           col("z_flag") + col("mad_flag") + col("ewma_flag"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("q21_waiting") {
       // the double-correlation rewrite at fact scale: one corpus
@@ -1005,7 +893,7 @@ object Stress {
         .repartition(col("l_orderkey"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("l_orderkey"))
-      val out = li.groupBy(col("l_orderkey"), col("l_suppkey"))
+      li.groupBy(col("l_orderkey"), col("l_suppkey"))
         .agg(sum(col("is_late")).as("late_lines"))
         .select(col("l_suppkey"), col("late_lines"),
           count(lit(1)).over(w).as("n_supp"),
@@ -1016,8 +904,6 @@ object Stress {
         .groupBy(col("l_suppkey"))
         .agg(sum(col("late_lines")).as("numwait"))
         .orderBy(col("numwait").desc, col("l_suppkey")).limit(20)
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("q18_big_orders") {
       // per-order rollup + broadcast of the having survivors into the
@@ -1029,34 +915,29 @@ object Stress {
         .groupBy(col("l_orderkey"))
         .agg(graft.functions.sumExact(col("l_quantity"), 18, 2).as("sum_qty"))
         .filter(col("sum_qty") > 180.0))
-      val out = qtyF
+      qtyF
         .join(ordR.select("o_orderkey", "o_orderdate"),
           col("l_orderkey") === col("o_orderkey"))
         .orderBy(col("sum_qty").desc, col("o_orderkey")).limit(100)
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     time("phash_pairs") {
       val media = graft.operators.Multimodal.asMedia(
         docs.withColumn("source", lit("s")), "doc_id", "text", "source")
       val h = graft.operators.Multimodal.perceptualHash(media).toDF()
         .localCheckpoint(true)
-      try graft.operators.Multimodal.phashNearDups(h, maxHamming = 3).count()
-      finally org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(h)
+      graft.operators.Multimodal.phashNearDups(h, maxHamming = 3)
     }
     // leak-free split over the LSH pair graph — the documented 100 TB
     // path (the exact-Jaccard pair mass is replica-quadratic: measured
     // 86 s at 20x, boundary at 50x, in the cluster-family rows; a first
     // cut of this entry on capped-exact pairs spent 152 of 155 s in pair
     // generation the family already measures) + component clustering +
-    // the md5 assignment; checksum-forced
+    // the md5 assignment
     time("split_leakfree") {
       val clusters = Dedup.clusterPairs(
         Dedup.minhashLshPairs(docs, "doc_id", "text"),
         onRound = logRounds("split_leakfree"))
-      val out = Dedup.assignSplits(docs, clusters, "doc_id")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      Dedup.assignSplits(docs, clusters, "doc_id")
     }
     // the capped-band twin of split_leakfree: the uncapped row's cost is
     // dominated by replica-clique HOT BUCKETS (one bucket of s members =
@@ -1069,27 +950,21 @@ object Stress {
         Dedup.minhashLshPairs(docs, "doc_id", "text",
           maxBandFreq = Some(200L)),
         onRound = logRounds("split_leakfree_capped"))
-      val out = Dedup.assignSplits(docs, clusters, "doc_id")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      Dedup.assignSplits(docs, clusters, "doc_id")
     }
     // multi-table LSH at the shipped 8x6 recipe over the replicated
     // vectors: the fan-out multiplies the scan by L, the shuffle only
     // carries pruned candidates
     time("lsh_multi_topk") {
-      val out = Similarity.lshTopKMulti(emb, emb.filter(col("vec_id") < 8),
+      Similarity.lshTopKMulti(emb, emb.filter(col("vec_id") < 8),
         "vec_id", "embedding", 10, nPlanes = 6, nTables = 8)
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // cross-source overlap with replica-tagged sources (20 per replica-
     // band keeps S constant while shingle mass scales with factor)
     time("source_overlap") {
       val src = docs.withColumn("source",
         concat(lit("s"), pmod(col("doc_id"), lit(20L))))
-      val out = Dedup.sourceOverlap(src, "source", "text")
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      Dedup.sourceOverlap(src, "source", "text")
     }
     // seasonal monitor: hourly-rollup-bounded after the map-side partial
     // — expected near-flat in factor like the rest of the monitor family
@@ -1099,10 +974,8 @@ object Stress {
         .agg(count(lit(1)).as("cnt"))
         .withColumn("season_key", concat(col("event_type"), lit("#"),
           lpad(hour(col("hour_ts")).cast("string"), 2, "0")))
-      val out = graft.operators.Quality.spikesFromHourly(
+      graft.operators.Quality.spikesFromHourly(
         hourly, "season_key", "hour_ts", "cnt", trailing = 7, z = 3, minN = 4)
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // VARIANT extraction: parse + path reads are one projection — expect
     // scan-shaped growth (props synthesized; the bench query's shape)
@@ -1115,7 +988,7 @@ object Stress {
         when(col("event_id") % 2 === 1, col("user_id").cast("string"))
           .otherwise(concat(lit("\""), col("event_type"), lit("\""))))
         .alias("payload")
-      val out = ev.withColumn("v", parse_json(concat(payload, lit("}"))))
+      ev.withColumn("v", parse_json(concat(payload, lit("}"))))
         .select(
           variant_get(col("v"), "$.u.seg", "string").as("seg"),
           variant_get(col("v"), "$.u.id", "bigint").as("uid"),
@@ -1126,8 +999,6 @@ object Stress {
         .agg(count(lit(1)).as("n"), sum(col("uid")).as("sum_uid"),
           sum(col("k")).as("sum_k"), sum(col("m1")).as("sum_m1"),
           count(col("xnum")).as("n_x"), sum(col("xnum")).as("sum_x"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // the text-re-parse alternative VARIANT replaces: the SAME payload
     // and rollup, but every path access is a get_json_object that
@@ -1141,7 +1012,7 @@ object Stress {
         when(col("event_id") % 2 === 1, col("user_id").cast("string"))
           .otherwise(concat(lit("\""), col("event_type"), lit("\""))),
         lit("}"))
-      val out = ev.withColumn("js", payload)
+      ev.withColumn("js", payload)
         .select(
           get_json_object(col("js"), "$.u.seg").as("seg"),
           get_json_object(col("js"), "$.u.id").cast("long").as("uid"),
@@ -1153,8 +1024,6 @@ object Stress {
         .agg(count(lit(1)).as("n"), sum(col("uid")).as("sum_uid"),
           sum(col("k")).as("sum_k"), sum(col("m1")).as("sum_m1"),
           count(col("xnum")).as("n_x"), sum(col("xnum")).as("sum_x"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // q20 shape at fact scale: both conditional sums in ONE pair rollup
     // (partkey/suppkey/quantity synthesized the scorecard way)
@@ -1169,11 +1038,9 @@ object Stress {
         .groupBy(col("l_partkey"), col("l_suppkey"))
         .agg(sum(when(col("__in97"), col("qty")).otherwise(0L)).as("q97"),
           sum(col("qty")).as("qall"))
-      val out = pair
+      pair
         .filter(col("q97") > 0L && lit(2L) * col("q97") > col("qall"))
         .groupBy(col("l_suppkey")).agg(count(lit(1)).as("n_excess"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // q2 shape at fact scale: ONE partkey Exchange serves the pair
     // rollup AND the window min (price synthesized)
@@ -1190,10 +1057,8 @@ object Stress {
         .repartition(col("l_partkey"))
         .groupBy(col("l_partkey"), col("l_suppkey"))
         .agg(min(col("price")).as("min_cost"))
-      val out = cost.withColumn("__best", min(col("min_cost")).over(w))
+      cost.withColumn("__best", min(col("min_cost")).over(w))
         .filter(col("min_cost") === col("__best"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // k-anonymity audit: two map-side rollups over one corpus scan —
     // expect scan-shaped (quasi-identifiers synthesized per doc)
@@ -1217,9 +1082,7 @@ object Stress {
           col("g"))
         .groupBy("level", "band")
         .agg(count(lit(1)).as("n_classes"), sum(col("g")).as("n_rows"))
-      val out = level(cells, "chars_100").unionByName(level(coarse, "chars_1000"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
+      level(cells, "chars_100").unionByName(level(coarse, "chars_1000"))
     }
     // blocklist: ONE Aho-Corasick walk per doc for ALL 24 terms — expect
     // scan-shaped; compare against the naive per-term replace twin below
@@ -1229,7 +1092,7 @@ object Stress {
       "stream")
     time("blocklist_hits") {
       val termArr = array(stressTerms.map(lit): _*)
-      val out = docs
+      docs
         .select(concat(lit("s"), pmod(col("doc_id"), lit(20L))).as("source"),
           posexplode(graft.functions.blocklistCounts(lower(col("text")),
             stressTerms)).as(Seq("i", "cnt")))
@@ -1238,24 +1101,21 @@ object Stress {
           sum(col("cnt")).as("total_hits"))
         .select(col("source"), element_at(termArr, col("i") + 1).as("term"),
           col("n_docs"), col("total_hits"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // probe: kernel scan alone (no explode/rollup) — isolates the
     // automaton cost from the downstream shape
     time("blocklist_scan") {
-      val out = docs.select(
+      docs.select(
         graft.functions.blocklistCounts(lower(col("text")), stressTerms)
           .as("c"))
         .select(element_at(col("c"), 5).as("x"), element_at(col("c"), 1).as("y"))
-      out.agg(sum(col("x")), sum(col("y")), count(lit(1))).head().getLong(2)
     }
     // probe: explode + rollup alone over a constant array (no kernel) —
     // isolates the downstream shape cost
     time("blocklist_explode_const") {
       val termArr = array(stressTerms.map(lit): _*)
       val constArr = array(stressTerms.indices.map(i => lit(i.toLong)): _*)
-      val out = docs
+      docs
         .select(concat(lit("s"), pmod(col("doc_id"), lit(20L))).as("source"),
           posexplode(constArr).as(Seq("i", "cnt")))
         .select(col("source"), element_at(termArr, col("i") + 1).as("term"),
@@ -1263,8 +1123,6 @@ object Stress {
         .groupBy("source", "term")
         .agg(sum((col("cnt") > 0).cast("long")).as("n_docs"),
           sum(col("cnt")).as("total_hits"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // the naive alternative the kernel replaces: one replace() pass PER
     // TERM (24 string rewrites per row) — same scan count, T× the per-row
@@ -1278,11 +1136,9 @@ object Stress {
           ((length(col("t")) - length(expr(s"replace(t, '$t', '')")))
             / t.length).cast("long").as(s"c$i")
       }: _*)
-      val out = counted.groupBy("source")
+      counted.groupBy("source")
         .agg(sum(col("c0")).as("s0"),
           stressTerms.indices.tail.map(i => sum(col(s"c$i")).as(s"s$i")): _*)
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // ACF over 24 lags: everything after the hourly rollup rides the
     // checkpointed hours×types frame — expect near-flat past the rollup
@@ -1290,10 +1146,8 @@ object Stress {
       val hourly = ev
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
         .agg(count(lit(1)).as("n"))
-      val out = graft.operators.Quality.acf(hourly, "event_type", "h", "n",
+      graft.operators.Quality.acf(hourly, "event_type", "h", "n",
         (1 to 24))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // URL canonicalization + dedup: zero-shuffle regex/sort projection +
     // one canonical-key rollup — expect scan-shaped
@@ -1314,17 +1168,15 @@ object Stress {
           .otherwise(lit("")),
         when(id % 11 === 0, concat(lit("&c="), id % 3)).otherwise(lit("")),
         when(id % 6 === 0, lit("#Section-2")).otherwise(lit("")))
-      val out = docs
+      docs
         .select(id.as("doc_id"), graft.functions.canonicalizeUrl(url).as("cu"))
         .groupBy("cu")
         .agg(count(lit(1)).as("n_variants"), min(col("doc_id")).as("first_doc"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // Mann-Whitney: distinct-value rollup + distributed prefix sums (the
     // value_ks machinery) — expect the same shape as value_ks
     time("value_mwu") {
-      val out = graft.operators.Quality.mwuStatistic(
+      graft.operators.Quality.mwuStatistic(
           ev.withColumn("value",
             (pmod(xxhash64(col("event_id")), lit(100000L)) / 16.0)),
           "event_type", "value", "click", "view")
@@ -1332,8 +1184,6 @@ object Stress {
           ev.withColumn("value",
             (pmod(xxhash64(col("event_id")), lit(100000L)) / 16.0)),
           "event_type", "value", "click", "error"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
     // kappa agreement: one corpus scan + a single-row confusion rollup
     time("classifier_agreement") {
@@ -1342,7 +1192,7 @@ object Stress {
           TextAnalysis.hashedLinearScoreCol(col("text"),
             TextAnalysis.knuthWeights(64)).as("clf_score"))
       val thr = base.agg(expr("percentile(quality_score, 0.25)").as("__thr"))
-      val out = base.crossJoin(broadcast(thr))
+      base.crossJoin(broadcast(thr))
         .select(
           (col("quality_score") >= col("__thr")).cast("long").as("h"),
           (col("clf_score") >= 0L).cast("long").as("c"))
@@ -1351,23 +1201,9 @@ object Stress {
           sum(col("h") * (lit(1L) - col("c"))).as("n10"),
           sum((lit(1L) - col("h")) * col("c")).as("n01"),
           sum((lit(1L) - col("h")) * (lit(1L) - col("c"))).as("n00"))
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
     }
 
     // ---- round-11 session-4 additions ----
-    def withConfs(pairs: Seq[(String, String)])(f: => Long): Long = {
-      val conf = spark.conf
-      val prev = pairs.map { case (k, _) => k -> conf.getOption(k) }
-      pairs.foreach { case (k, v) => conf.set(k, v) }
-      try f
-      finally prev.foreach { case (k, v) =>
-        v.fold(conf.unset(k))(conf.set(k, _)) }
-    }
-    def checksum(out: DataFrame): Long =
-      out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
-        .head().getLong(1)
-
     // t-closeness: one (QI, lang) cell rollup; everything after is
     // classes×langs-bounded — expect scan-shaped like k_anonymity
     time("t_closeness") {
@@ -1399,8 +1235,8 @@ object Stress {
               (col("g").cast("double") * col("nn").cast("double") * 2.0))
               .as("max_t"))
       }
-      checksum(level(cells100, "chars_100")
-        .unionByName(level(cells1000, "chars_1000")))
+      level(cells100, "chars_100")
+        .unionByName(level(cells1000, "chars_1000"))
     }
 
     // source keyness: one (source, term) shuffle + vocab-bounded totals +
@@ -1409,8 +1245,8 @@ object Stress {
       val withSrc = docs.select(col("doc_id"),
         concat(lit("s"), pmod(col("doc_id"), lit(20L))).as("source"),
         col("text"))
-      checksum(TextAnalysis.sourceKeyness(withSrc, "source", "text",
-        minCount = 5L, k = 15))
+      TextAnalysis.sourceKeyness(withSrc, "source", "text",
+        minCount = 5L, k = 15)
     }
 
     // AQE skew split on a 60%-hot key vs the same join with the split
@@ -1424,40 +1260,34 @@ object Stress {
     val skewDim = ev.select(col("user_id").as("k")).distinct()
       .withColumn("w", pmod(col("k"), lit(25L)))
       .localCheckpoint(true) // bare scan: the SMJ(Sort(stage),Sort(stage)) shape
-    def skewJoinBody(): Long = {
+    def skewJoinBody(): DataFrame = {
       val hot = when(col("user_id") % 10 < 6, lit(0L)).otherwise(col("user_id"))
       val e = ev.select(hot.as("k"),
         (pmod(xxhash64(col("event_id")), lit(10000L)) / 100.0).as("value"))
-      val out = e.join(skewDim, Seq("k"))
+      e.join(skewDim, Seq("k"))
         .groupBy((col("k") % 7).as("kb"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("total"),
           sum(col("w")).as("wsum"))
-      checksum(out)
     }
-    time("skew_join") {
-      withConfs(skewConfs :+
+    time("skew_join", skewConfs :+
         ("spark.sql.adaptive.skewJoin.enabled" -> "true"))(skewJoinBody())
-    }
-    time("skew_join_nosplit") {
-      withConfs(skewConfs :+
+    time("skew_join_nosplit", skewConfs :+
         ("spark.sql.adaptive.skewJoin.enabled" -> "false"))(skewJoinBody())
-    }
 
     // runtime bloom semi-join reduction on the replicated fact vs the
     // same shuffle join without the filter — the measured shuffle win
     val bloomConfs = Seq(
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    def bloomBody(): Long = {
+    def bloomBody(): DataFrame = {
       val o = ordR.filter(col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey")
-      val out = li.join(o, col("l_orderkey") === col("o_orderkey"))
+      li.join(o, col("l_orderkey") === col("o_orderkey"))
         .groupBy((col("l_partkey") % 25).as("pb"))
         .agg(count(lit(1)).as("n"),
           sum(col("l_extendedprice").cast("decimal(28,6)")).cast("double")
             .as("revenue"))
-      checksum(out)
     }
     // self-evidence, UNTIMED, printed per variant BEFORE its timing: a
     // bloom timing only means something if the filter was actually
@@ -1467,29 +1297,21 @@ object Stress {
     // long before any saturation question arises, and a disqualified
     // "bloom" run silently times the PLAIN join.
     def bloomProbe(tag: String, confs: Seq[(String, String)]): Unit =
-      if (only.isEmpty || only.contains(tag)) {
-        val conf = spark.conf
-        val prev = confs.map { case (k, _) => k -> conf.getOption(k) }
-        confs.foreach { case (k, v) => conf.set(k, v) }
-        try {
-          val o = ordR.filter(col("o_orderpriority") === "1-URGENT")
-            .select("o_orderkey")
-          val plan = li.join(o, col("l_orderkey") === col("o_orderkey"))
-            .queryExecution.optimizedPlan
-          val inj = plan.toString.contains("might_contain")
-          val est = o.queryExecution.optimizedPlan.stats.sizeInBytes
-          println(s"[stress] $tag injected=$inj creation_est_bytes=$est")
-        } finally prev.foreach { case (k, v) =>
-          v.fold(conf.unset(k))(conf.set(k, _)) }
+      if (only.isEmpty || only.contains(tag)) withConfs(confs) {
+        val o = ordR.filter(col("o_orderpriority") === "1-URGENT")
+          .select("o_orderkey")
+        val plan = li.join(o, col("l_orderkey") === col("o_orderkey"))
+          .queryExecution.optimizedPlan
+        val inj = plan.toString.contains("might_contain")
+        val est = o.queryExecution.optimizedPlan.stats.sizeInBytes
+        println(s"[stress] $tag injected=$inj creation_est_bytes=$est")
       }
     val bloomOn = bloomConfs :+
       ("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true")
     bloomProbe("bloom_join", bloomOn)
-    time("bloom_join") { withConfs(bloomOn)(bloomBody()) }
-    time("bloom_join_off") {
-      withConfs(bloomConfs :+
+    time("bloom_join", bloomOn)(bloomBody())
+    time("bloom_join_off", bloomConfs :+
         ("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false"))(bloomBody())
-    }
     // the SIZED bloom path: expectedNumItems/numBits sized to the ~3M-key
     // 100× creation side (8M items × 8 bits/item ≈ 2% fpp) and the
     // creation threshold raised past the replicated frame's inherited
@@ -1504,9 +1326,7 @@ object Stress {
       "spark.sql.optimizer.runtime.bloomFilter.numBits" -> "67108864",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "8GB")
     bloomProbe("bloom_join_sized", sizedConfs)
-    time("bloom_join_sized") {
-      withConfs(sizedConfs)(bloomBody())
-    }
+    time("bloom_join_sized", sizedConfs)(bloomBody())
     // DEFAULT sizing (1M items / 8.4M bits) with only the creation
     // threshold forced — the configuration the round-11 "saturated
     // filter" narrative assumed was running: at 100× its ~3M keys
@@ -1516,9 +1336,7 @@ object Stress {
     val forcedConfs = bloomOn :+
       ("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "8GB")
     bloomProbe("bloom_join_forced", forcedConfs)
-    time("bloom_join_forced") {
-      withConfs(forcedConfs)(bloomBody())
-    }
+    time("bloom_join_forced", forcedConfs)(bloomBody())
 
     // DPP over a y/m/d lake staged from the replicated events: the write
     // is timed apart from the dynamically-pruned read it exists for
@@ -1528,7 +1346,7 @@ object Stress {
       graft.sources.Staging.writeStaged(
         ev.withColumn("value",
           (pmod(xxhash64(col("event_id")), lit(10000L)) / 100.0)), "ts", dppDir)
-      spark.read.parquet(dppDir).count()
+      spark.read.parquet(dppDir)
     }
     time("dpp_scan") {
       val lake = graft.sources.Staging.readStaged(spark, dppDir)
@@ -1541,11 +1359,10 @@ object Stress {
         .filter(col("n") * col("days") > col("nn"))
         .select(Seq("y", "m", "d").map(c =>
           col(c).cast(lake.schema(c).dataType).as(c)): _*)
-      val out = lake.join(broadcast(busy), Seq("y", "m", "d"))
+      lake.join(broadcast(busy), Seq("y", "m", "d"))
         .groupBy("y", "m", "d")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("total"))
-      checksum(out)
     }
     // free the replicated-lake copy from tmpfs IMMEDIATELY: the scratch
     // dir lives in /dev/shm, which counts against host RAM, and a
@@ -1563,8 +1380,8 @@ object Stress {
         .groupBy(date_trunc("hour", col("ts")).as("h"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .filter(expr("(unix_timestamp(h) div 3600) % 5 != 2"))
-      checksum(graft.operators.Temporal.interpolate(
-        hourly, "h", "event_type", "n"))
+      graft.operators.Temporal.interpolate(
+        hourly, "h", "event_type", "n")
     }
     // truncated-dim brute recall: slice before the candidate join, so
     // bytes scale with d; corpus-sized like the brute baseline
@@ -1572,14 +1389,13 @@ object Stress {
       val q = emb.filter(col("vec_id") < 8)
       def cut(df: DataFrame, dims: Int): DataFrame =
         df.withColumn("embedding", slice(col("embedding"), 1, dims))
-      val out = Seq(8, 64).map { dims =>
+      Seq(8, 64).map { dims =>
         Similarity.bruteForceTopK(cut(emb, dims), cut(q, dims),
           "vec_id", "embedding", 10)
           .groupBy()
           .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("s"))
           .withColumn("dims", lit(dims.toLong))
       }.reduce(_ unionByName _)
-      checksum(out)
     }
     // crypto-shred: per-row AES encrypt + decrypt (CPU-bound kernel work)
     time("crypto_shred") {
@@ -1594,7 +1410,7 @@ object Stress {
           aes_encrypt(col("props").cast("binary"), col("key"), lit("ECB"))
             .as("ct"))
       val kept = keys.filter(col("user_id") % 97 =!= 0)
-      val out = enc.join(kept, Seq("user_id"), "left")
+      enc.join(kept, Seq("user_id"), "left")
         .select(col("user_id"),
           try_aes_decrypt(col("ct"),
             coalesce(col("key"), lit(Array.emptyByteArray)), lit("ECB"))
@@ -1602,7 +1418,6 @@ object Stress {
         .groupBy((col("user_id") % 97 === 0).as("shredded"))
         .agg(count(lit(1)).as("n"),
           sum(col("pt").isNotNull.cast("long")).as("n_readable"))
-      checksum(out)
     }
     spark.stop()
   }

@@ -1,24 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // no session artifacts -> skip the per-class-miss RPC fetch the
-      // Spark 4 isolation default installs (see GraftSession)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.warehouse.dir", GraftSession.warehouseDir())
-      .config("spark.local.dir", GraftSession.scratchDir())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (driver leaves it unset): restricts both the
     // dumped results and oracle_sql.json so tools/check.py checks a subset
@@ -35,8 +23,7 @@ object Verify {
       // free per-query caches/checkpoints (lm_score_cached count tables,
       // cluster-family localCheckpoints) — the round-3 storage-pressure
       // variance class, same sweep Bench performs
-      val rdds = spark.sparkContext.getPersistentRDDs
-      (rdds.keySet -- baseline).foreach(id => rdds(id).unpersist(blocking = false))
+      GraftSession.sweep(spark, baseline)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -471,8 +471,7 @@ object Dedup {
     * executor storage. Exactly ONE checkpoint (the final label set) backs
     * the returned DataFrame; call [[releaseClusters]] when done with it. */
   def clusterPairs(pairs: DataFrame, d1: String = "d1", d2: String = "d2",
-      onRound: (Int, Double) => Unit = (_, _) => (), jumps: Int = 1): DataFrame = {
-    require(jumps >= 0, s"need jumps >= 0, got $jumps")
+      onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     // every checkpoint resets plan statistics: the size-only estimator
     // multiplies through each round's joins, and localCheckpoint would
@@ -495,22 +494,22 @@ object Dedup {
         .groupBy(col("a").as("id"))
         .agg(min(col("nlabel")).as("nmin"))
       // FastSV-shaped round: fold the neighbor min into the label FIRST,
-      // then shortcut the FRESH forest (l := l∘l) `jumps` times inside
-      // the same plan (shortcutting STALE parents was measured a no-op).
-      var folded = labels
+      // then shortcut the FRESH forest (l := l∘l) once inside the same
+      // plan (shortcutting STALE parents was measured a no-op; two or
+      // three shortcut hops per round measured slower than one — the
+      // extra self-joins cost more than the rounds they save).
+      val folded = labels
         .join(neighborMin, Seq("id"), "left")
         .select(col("id"), col("label"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("l"))
-      for (_ <- 1 to jumps)
-        folded = folded
-          .join(folded.select(col("id").as("l"), col("l").as("__l2")), Seq("l"), "left")
-          .select(col("id"), col("label"),
-            coalesce(col("__l2"), col("l")).as("l"))
+      val jumped = folded
+        .join(folded.select(col("id").as("l"), col("l").as("__l2")), Seq("l"), "left")
+        .select(col("id"), col("label"), coalesce(col("__l2"), col("l")).as("l"))
       // ONE eager materialization per round: the convergence probe reads
       // this checkpoint, and the next round's labels are a narrow
       // PROJECTION over the same blocks (a second `next` checkpoint was
       // measured pure overhead — it re-wrote the identical row set)
-      val updated = ckpt(folded.select(col("id"), col("label"), col("l").as("next")))
+      val updated = ckpt(jumped.select(col("id"), col("label"), col("l").as("next")))
       converged = updated.filter(col("next") =!= col("label")).isEmpty
       labels = updated.select(col("id"), col("next").as("label"))
       // CONTRACT the graph: rewrite edges over current labels, dropping

@@ -48,12 +48,22 @@ object Bridge {
     * unpersist loop) must NOT pass through, or multi-pass builders
     * re-execute per pass / fail on missing checkpoint blocks. The walk
     * mirrors [[unpersistCheckpoints]]: the wrapped RDD may be a narrow
-    * derivative of the persisted one. */
+    * derivative of the persisted one. The walk visits each RDD once: a
+    * lineage DAG that re-uses an RDD (a self-union) has exponentially
+    * many dependency PATHS, so a plain recursive walk never returns. */
   def isCheckpointBacked(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    def persisted(r: org.apache.spark.rdd.RDD[_]): Boolean =
-      r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE ||
-        r.dependencies.exists(d => persisted(d.rdd))
+    def persisted(root: org.apache.spark.rdd.RDD[_]): Boolean = {
+      val seen = scala.collection.mutable.HashSet[Int](root.id)
+      val todo = scala.collection.mutable.Stack[org.apache.spark.rdd.RDD[_]](root)
+      var found = false
+      while (!found && todo.nonEmpty) {
+        val r = todo.pop()
+        if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) found = true
+        else r.dependencies.foreach(d => if (seen.add(d.rdd.id)) todo.push(d.rdd))
+      }
+      found
+    }
     def walk(p: LogicalPlan): Boolean = p match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => persisted(lr.rdd)
       case pr: Project => walk(pr.child)
